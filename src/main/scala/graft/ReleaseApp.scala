@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** CLI entry for the DURABLE release pipeline
-  * ([[graft.plans.ReleaseRun]]): raw crawl to digest-verified
-  * training artifact, with every stage boundary a real parquet table
-  * so a killed run RESUMES from its last completed stage and a
+/** CLI entry for the DURABLE release run ([[graft.plans.ReleaseRun]]):
+  * raw crawl to digest-verified training artifact. Day 0 releases as
+  * batch 0 of the incremental runner into `<out>/state`, every delta
+  * published idempotently, so a killed run RESUMES by re-running and a
   * finished run re-verifies idempotently.
   *
   * Usage:
@@ -14,13 +14,16 @@ import org.apache.spark.sql.SparkSession
   *     [--config=release.json]  # gates/thresholds as reviewable JSON
   *                              #   ([[graft.plans.ReleaseConfig]])
   *     [--capacity=512] [--num-shards=4]  # overrides on the config
-  *     [--stop-after=s5_keep]   # halt after a stage (crash drill)
+  *     [--stop-after="incr 5"]  # halt after a runDeltas stage (crash
+  *                              #   drill): incr 1 … incr 9
   *     [--fresh=true]           # delete the run dir first
   *
-  * Resume is the DEFAULT: pointing at an existing --out skips every
-  * completed stage. The run prints per-part row counts of the
-  * verified artifact; stage tables stay queryable under
-  * `<out>/stages/` as the release's audit surface.
+  * Resume is the DEFAULT: pointing at an existing --out re-runs and
+  * every publish that already landed is a no-op. The run prints
+  * per-part row counts of the verified artifact; there is no
+  * `<out>/stages/` — the state under `<out>/state` (its `ledger`:
+  * every rejected doc with its stage and reason) is the release's
+  * audit surface.
   */
 object ReleaseApp {
   def main(rawArgs: Array[String]): Unit = {

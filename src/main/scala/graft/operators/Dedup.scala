@@ -837,13 +837,15 @@ object Dedup {
     * persisted state, like the still-live edge set during iteration,
     * belongs to other frames). The frame REMAINS usable — its RDD
     * lineage is intact, so later reads just recompute. No-op for
-    * ordinary lazy plans. */
-  def release(df: DataFrame): Unit = {
+    * ordinary lazy plans. Persisted RDDs whose ids are in `keep` (a
+    * caller's own cached frames) are spared — the walk stops there too. */
+  def release(df: DataFrame, keep: collection.Set[Int] = Set.empty): Unit = {
     val seen = scala.collection.mutable.HashSet.empty[Int]
     def walk(r: org.apache.spark.rdd.RDD[_]): Unit = if (seen.add(r.id)) {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false) // stop: deeper persists are not ours
-      else r.dependencies.foreach(d => walk(d.rdd))
+      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {
+        // stop: deeper persists are not ours
+        if (!keep(r.id)) r.unpersist(blocking = false)
+      } else r.dependencies.foreach(d => walk(d.rdd))
     }
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd)

@@ -6,22 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 
 /** The end-to-end RELEASE pipeline — raw crawl to digest-verified
-  * training artifact — as ONE parameterized dataflow shared by its
-  * two execution forms:
+  * training artifact — as ONE from-scratch dataflow over the whole
+  * corpus. It is the in-query form (`q_pipeline_release`) and the
+  * reference the incremental runner is pinned against: a release run
+  * ([[graft.plans.ReleaseRun]]) releases day 0 as batch 0 of
+  * [[graft.plans.IncrementalRelease.runDeltas]] over an empty state,
+  * and IncrementalReleaseSpec / ReleaseRunSpec plus the
+  * DuckDB oracle (the same CTE pyramid for `q_pipeline_release` and
+  * `q_pipeline_release_run`) hold the two row-identical.
   *
-  *   - the in-query form (`q_pipeline_release`): stage boundaries cut
-  *     with `localCheckpoint` ([[Release.LocalStager]]) — fast, but
-  *     blocks die with an executor and nothing survives the session;
-  *   - the durable form ([[graft.plans.ReleaseRun]],
-  *     `q_pipeline_release_run`): every stage boundary is a REAL
-  *     parquet table published with an atomic rename, so a crashed
-  *     run resumes from its last completed stage and a finished run
-  *     re-verifies idempotently.
-  *
-  * Because both forms call THIS function, they cannot drift — the
-  * driver's DuckDB oracle gates them under the same CTE pyramid.
-  *
-  * Stages (each `st(name){...}` is a materialization boundary; the
+  * Stages (each `localCheckpoint()` is a materialization boundary —
+  * blocks die with an executor and nothing survives the session; the
   * fan-out rationale — ~15 result branches re-analyzing the chained
   * lineage, 307 s / 1 GB treeString at sf0.1 when left uncut — is
   * recorded in the round-13 notes):
@@ -49,49 +44,9 @@ import graft.functions.TextFunctions
   */
 object Release {
 
-  /** A stage-boundary materializer. `apply` takes the stage name and
-    * a BY-NAME frame builder: a durable stager whose stage table
-    * already exists skips the builder entirely (resume never replays
-    * completed work — including the driver-side loops, k-means /
-    * BPE-training / pointer-doubling, that run inside a builder). */
-  trait Stager {
-    def apply(name: String)(df: => DataFrame): DataFrame
-  }
-
-  /** The in-query materializer: localCheckpoint lineage cuts. */
-  final class LocalStager extends Stager {
-    def apply(name: String)(df: => DataFrame): DataFrame = df.localCheckpoint()
-  }
-
-  /** Every stage boundary [[pipeline]] materializes, in call order —
-    * the durable runner's table names and the resume spec's crash
-    * points (the spec pins a full run to exactly this sequence). */
-  val stageNames: Seq[String] = Seq(
-    "s0_input", "s1_gated", "s2_exact", "s3_nd_rejects", "s4_split",
-    "s5_lex_ok", "s5_test_emb", "s5_tv_emb", "s5_sem_hits", "s5_keep",
-    "s6_turns", "s6_aturns", "s6_dup_rejects", "s6_conv", "s6_packed",
-    "s9_ledger")
-
-  /** The nine-stage pipeline over an already-constructed raw input.
-    *
-    * @param rawInput      (doc_id BIGINT, source STRING, raw STRING) —
-    *                      the crawl rows as ingested (markup, encoding
-    *                      pathologies and all)
-    * @param embeddings    (vec_id BIGINT, embedding ARRAY<FLOAT>) —
-    *                      doc-keyed embedding side table (absence of a
-    *                      row = no semantic evidence, never a leak)
-    * @param transcriptsOf survivor text → (doc_id, transcript) JSON
-    *                      conversations (injected: the fixture
-    *                      synthesizes, production parses real logs)
-    * @param merges        the FROZEN release tokenizer's merge table,
-    *                      as a thunk so a resumed run whose stage-6
-    *                      tables exist never pays the training
-    * @return the (part, k, v) artifact frame: `pack` / `shard` /
-    *         `ledger` / `manifest` / `reconcile` parts
-    */
   // ------------------------------------------------ shared stage blocks
   //
-  // The expression-level building blocks BOTH release forms share with
+  // The expression-level building blocks the pipeline shares with
   // the incremental runner ([[graft.plans.IncrementalRelease]]): the
   // incremental's batch-equal-to-from-scratch oracle only holds if a
   // batch flows through bit-identical gate/cost expressions, so these
@@ -194,23 +149,38 @@ object Release {
           .as("loss_tokens"))
       .withColumn("grp", pmod(col("doc_id"), lit(groups)))
 
+  /** The nine-stage pipeline over an already-constructed raw input.
+    *
+    * @param rawInput      (doc_id BIGINT, source STRING, raw STRING) —
+    *                      the crawl rows as ingested (markup, encoding
+    *                      pathologies and all)
+    * @param embeddings    (vec_id BIGINT, embedding ARRAY<FLOAT>) —
+    *                      doc-keyed embedding side table (absence of a
+    *                      row = no semantic evidence, never a leak)
+    * @param transcriptsOf survivor text → (doc_id, transcript) JSON
+    *                      conversations (injected: the fixture
+    *                      synthesizes, production parses real logs)
+    * @param merges        the FROZEN release tokenizer's merge table,
+    *                      as a thunk pulled only at stage 6
+    * @return the (part, k, v) artifact frame: `pack` / `shard` /
+    *         `ledger` / `manifest` / `reconcile` parts
+    */
   def pipeline(
       s: SparkSession,
       rawInput: DataFrame,
       embeddings: DataFrame,
       transcriptsOf: DataFrame => DataFrame,
       merges: () => Seq[(String, String)],
-      st: Stager,
       cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig()): DataFrame = {
     val id = col("doc_id")
 
     // 0 — the input is itself a boundary: stage 1 and the reconcile
     // tie-out both scan it
-    val input = st("s0_input")(rawInput.select(id, col("source"), col("raw")))
+    val input = rawInput.select(id, col("source"), col("raw")).localCheckpoint()
 
     // 1 — ingest
     val raw = withEncOk(input)
-    val gated = st("s1_gated")(scoredGates(raw, cfg))
+    val gated = scoredGates(raw, cfg).localCheckpoint()
     val (encRejects, gateRejects) = ingestRejectRows(raw, gated)
     val ingested = ingestedRows(gated)
 
@@ -221,11 +191,11 @@ object Release {
     val exactRejects = fp.filter(id =!= col("__keep"))
       .select(id, lit("exact").as("stage"),
         concat(lit("dup_of_"), col("__keep").cast("string")).as("reason"))
-    val exact = st("s2_exact")(fp.filter(id === col("__keep"))
-      .select(id, col("source"), col("text")))
+    val exact = fp.filter(id === col("__keep"))
+      .select(id, col("source"), col("text")).localCheckpoint()
 
     // 3 — capped near-dup keep-one
-    val ndRejects = st("s3_nd_rejects") {
+    val ndRejects = {
       val ndPairs = Dedup.minhashPairs(exact, "doc_id", "text",
         cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
         cfg.dedup.jaccardThreshold,
@@ -234,12 +204,12 @@ object Release {
         .filter(col("id") =!= col("rep"))
         .select(col("id").as("doc_id"), lit("neardup").as("stage"),
           concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
-    }
+    }.localCheckpoint()
     val nd = exact.join(ndRejects.select("doc_id"), Seq("doc_id"), "left_anti")
 
     // 4 — split: the test holdout leaves the training corpus
-    val split = st("s4_split")(Sampling.hashSplit(nd, "doc_id",
-      cfg.split.trainPct, cfg.split.valPct))
+    val split = Sampling.hashSplit(nd, "doc_id",
+      cfg.split.trainPct, cfg.split.valPct).localCheckpoint()
     val holdout = split.filter(col("split") === "test")
       .select(id, col("text"))
     val holdoutRejects = holdout
@@ -254,19 +224,18 @@ object Release {
     // eval leakage is asymmetric risk, and 32 bands × 2 rows puts the
     // candidate knee at ~0.18 so a 0.45-jaccard quote is a candidate
     // with P ~ 0.999 instead of a coin flip.
-    val lexOkIds = st("s5_lex_ok")(
-      Dedup.dedupAgainst(tv, holdout, "doc_id", "text",
-          cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
-          cfg.decontam.jaccardThreshold)
-        .select("doc_id"))
+    val lexOkIds = Dedup.dedupAgainst(tv, holdout, "doc_id", "text",
+        cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
+        cfg.decontam.jaccardThreshold)
+      .select("doc_id").localCheckpoint()
     val lexRejects = tv.select("doc_id")
       .join(lexOkIds, Seq("doc_id"), "left_anti")
       .select(id, lit("decontam").as("stage"), lit("lexical").as("reason"))
-    val testEmb = st("s5_test_emb")(embeddings.join(
-      holdout.select(id.as("vec_id")), Seq("vec_id"), "left_semi"))
-    val tvEmb = st("s5_tv_emb")(embeddings.join(
-      tv.select(id.as("vec_id")), Seq("vec_id"), "left_semi"))
-    val semHits = st("s5_sem_hits") {
+    val testEmb = embeddings.join(
+      holdout.select(id.as("vec_id")), Seq("vec_id"), "left_semi").localCheckpoint()
+    val tvEmb = embeddings.join(
+      tv.select(id.as("vec_id")), Seq("vec_id"), "left_semi").localCheckpoint()
+    val semHits = {
       val cents = Similarity.kmeansCentroidsDistributed(
         testEmb, "vec_id", "embedding",
         nlist = cfg.decontam.semanticNlist, iters = cfg.decontam.semanticIters)
@@ -277,20 +246,20 @@ object Release {
         .select(col("vec_id").as("doc_id"))
       tvEmb.select(col("vec_id").as("doc_id"))
         .join(semOkIds, Seq("doc_id"), "left_anti")
-    }
+    }.localCheckpoint()
     val semRejects = semHits.join(lexOkIds, Seq("doc_id"), "left_semi")
       .select(id, lit("decontam").as("stage"), lit("semantic").as("reason"))
-    val keep = st("s5_keep")(tv.join(lexOkIds, Seq("doc_id"), "left_semi")
-      .join(semHits, Seq("doc_id"), "left_anti"))
+    val keep = tv.join(lexOkIds, Seq("doc_id"), "left_semi")
+      .join(semHits, Seq("doc_id"), "left_anti").localCheckpoint()
 
     // 6 — the SFT endgame over the cleaned survivor text
-    val turns = st("s6_turns")(Chat.parseToolTurns(
+    val turns = Chat.parseToolTurns(
       transcriptsOf(keep.select("doc_id", "text")),
-      "doc_id", "transcript"))
+      "doc_id", "transcript").localCheckpoint()
     val (contractRejects, toolRejects, admitted) =
       sftGateRows(turns, cfg.sft.toolNames)
-    val aturns = st("s6_aturns")(turns.join(admitted, "doc_id"))
-    val sftDupRejects = st("s6_dup_rejects") {
+    val aturns = turns.join(admitted, "doc_id").localCheckpoint()
+    val sftDupRejects = {
       val convo = convoTexts(aturns)
       val sftPairs = Dedup.minhashPairs(convo, "doc_id", "text",
         cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
@@ -300,16 +269,16 @@ object Release {
         .filter(col("id") =!= col("rep"))
         .select(col("id").as("doc_id"), lit("sft_dedup").as("stage"),
           concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
-    }
-    val conv = st("s6_conv")(convCosted(aturns, merges(),
+    }.localCheckpoint()
+    val conv = convCosted(aturns, merges(),
         cfg.sft.turnOverhead, cfg.sft.groups)
-      .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))
-    val packed = st("s6_packed")(
-      Packing.packBinsByCount(conv, "doc_id", "grp", "n_tokens",
+      .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+    val packed = Packing.packBinsByCount(conv, "doc_id", "grp", "n_tokens",
         cfg.pack.capacity)
-        .select(col("id").as("doc_id"), col("grp"), col("n_tokens"),
-          col("bin_id"))
-        .join(conv.select("doc_id", "loss_tokens"), "doc_id"))
+      .select(col("id").as("doc_id"), col("grp"), col("n_tokens"),
+        col("bin_id"))
+      .join(conv.select("doc_id", "loss_tokens"), "doc_id").localCheckpoint()
 
     // 7 — token-balanced shards over the packed bins
     val bins = packed.groupBy("grp", "bin_id")
@@ -324,11 +293,11 @@ object Release {
         "source", "text"))
 
     // 9 — parts union + the reconcile tie-out
-    val ledger = st("s9_ledger")(encRejects.unionByName(gateRejects)
+    val ledger = encRejects.unionByName(gateRejects)
       .unionByName(exactRejects).unionByName(ndRejects)
       .unionByName(holdoutRejects).unionByName(lexRejects)
       .unionByName(semRejects).unionByName(contractRejects)
-      .unionByName(toolRejects).unionByName(sftDupRejects))
+      .unionByName(toolRejects).unionByName(sftDupRejects).localCheckpoint()
     val packPart = packed.select(lit("pack").as("part"),
       col("doc_id").cast("string").as("k"),
       concat_ws(":", col("grp"), col("bin_id"), col("n_tokens"),

@@ -6,6 +6,10 @@ import graft.functions.{SimilarityFunctions, TextFunctions}
 import graft.operators.{Chat, Dedup, Packing, Profile, Release, Sampling, Similarity}
 import graft.sources.{AnnIndex, DedupIndexStore, Segments}
 
+/** A run's `stopAfter` stage completed (the crash drill); caught by
+  * [[ReleaseRun.run]]. */
+private[graft] final class ReleaseHalted extends RuntimeException
+
 /** The INCREMENTAL release — "day N+1 = yesterday's state + today's
   * crawl batch, history never rescanned": the composition of every
   * O(batch) piece the engine already owns into one runner, so a new
@@ -43,9 +47,22 @@ import graft.sources.{AnnIndex, DedupIndexStore, Segments}
   *   reconcile/        (n_input, sum_input, n_acc, sum_acc) per batch
   *   id_watermark/     (max_id) per batch — the monotone-id fence
   *
+  * DAY 0 IS BATCH 0: an empty state directory is a legal input. A
+  * table that does not exist yet reads as empty, and a store that
+  * does not exist yet is BUILT from the batch's own frame at `seg=0`
+  * (the minhash stores with the config's banding, `holdout_ann` with
+  * k-means centroids trained on the batch's holdout embeddings — the
+  * frozen semantic model). [[ReleaseRun]] releases day 0 exactly this
+  * way, into `<outDir>/state`, and [[bootstrap]] adopts that state.
+  * A streamed batch id refuses an empty state: its stores would sit at
+  * `seg=0`, where a replay of that batch could not exclude them.
+  * The state's `ledger` (why every rejected doc left, and at which
+  * stage) is the release's audit surface.
+  *
   * REPLAY SAFETY (exactly-once across crash replays): a batch run
   * under an explicit `batchId` publishes EVERY state delta and store
-  * segment idempotently at segment id `StreamSegBase + batchId`
+  * segment idempotently at segment id `StreamSegBase + batchId` (day
+  * 0 through [[ReleaseRun]]: at `seg=0` of the fresh state)
   * ([[Segments.publishSegment]] / [[DedupIndexStore.appendMinhashAt]]
   * / [[AnnIndex.appendToIvfAt]]), and every table the batch reads
   * BEFORE appending is read with the batch's OWN segment excluded —
@@ -53,12 +70,12 @@ import graft.sources.{AnnIndex, DedupIndexStore, Segments}
   * Structured Streaming checkpoint replay recomputes the identical
   * deltas (reads see exactly what the first attempt saw) and each
   * re-publish lands once or no-ops. No intent markers, no
-  * double-append window, no fresh-bootstrap recovery required —
+  * double-append window, no fresh-state recovery required —
   * the streaming form ([[graft.streaming.StreamOps.releaseStream]])
   * restarts are safe mid-batch. Without a `batchId` (the manual
   * batch form) appends auto-number below the streaming floor and
   * carry no replay contract — don't re-run a crashed manual batch
-  * against the same state dir; bootstrap a fresh one.
+  * against the same state dir; release a fresh one.
   *
   * EQUALITY CONTRACT (the oracle `q_pipeline_release_incr` pins it):
   * an incremental run's artifact is row-identical to a from-scratch
@@ -97,7 +114,7 @@ import graft.sources.{AnnIndex, DedupIndexStore, Segments}
   * Every standing-store probe is O(batch) on the store side: the
   * exact-keeper probe and the banded/fingerprint probes reduce the
   * store FIRST by a broadcast semi-join on the batch's own key set
-  * (`pruneIndexToProbe`), so no per-batch plan ever shuffles a
+  * (`pruneIndexToProbe = true`), so no per-batch plan ever shuffles a
   * corpus-sized index. (At batches above broadcast size, write the
   * stores bucketed — [[graft.sources.BucketedCatalogIO]] — and the
   * same probes go shuffle-free on the store side without the
@@ -111,23 +128,18 @@ object IncrementalRelease {
     * manual auto-numbered appends can never collide. */
   private def segIdOf(batchId: Long): Long = Segments.StreamSegBase + batchId
 
-  /** A/B toggle for the store-probe prune plan shape (the
-    * `BENCH_sf1skew_r17` on/off measurement): the prune is
-    * semantics-preserving by construction (see
-    * [[graft.operators.Dedup.prunedIndexProbe]] — whole buckets kept,
-    * pruned-away buckets are never probed), so results are identical
-    * either way; default ON. Dev-only knob, read once. */
-  private val pruneProbes: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_PRUNE_PROBE", "true").toBoolean
+  /** The stage labels [[runDeltas]] marks its jobs with (`incr 5:
+    * decontam`) — also the halt points [[ReleaseRun.run]]'s
+    * `stopAfter` names. */
+  val StageLabels: Seq[String] = Seq("incr 1", "incr 2", "incr 3",
+    "incr 3b", "incr 4", "incr 5", "incr 6", "incr 7", "incr 9")
 
-  /** UI/profiler attribution (guide §1.5): every job `body` spawns —
-    * including broadcast-exchange child jobs, which capture the
-    * submitting thread's locals — carries `desc`. */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(prev)
-  }
+  /** Refuse a `stopAfter` that names no stage — it would never match,
+    * and the "halted" run would silently complete. */
+  private[graft] def requireStageLabel(label: String): Unit =
+    require(StageLabels.contains(label),
+      s"unknown stop-after stage '$label'; valid stages: " +
+        StageLabels.mkString(", "))
 
   /** Run INDEPENDENT state/store writes concurrently (guide §2.6 —
     * overlap independent jobs): each append/build is a small job over
@@ -138,20 +150,42 @@ object IncrementalRelease {
     * ordering inside the group (the append-then-read barriers in
     * [[runDeltas]] stay sequential). Threads inherit the caller's job
     * description (SparkContext local properties clone at thread
-    * creation); the first failure rethrows after all tasks settle, so
-    * a crash replay sees the same "some subset published" states the
-    * sequential form could leave. */
+    * creation); after all tasks settle the first failure (in task
+    * order) rethrows with every other failure attached as suppressed,
+    * so a crash replay sees the same "some subset published" states
+    * the sequential form could leave and no failure goes unreported. */
   private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val threads = tasks.map { t =>
-      new Thread(() =>
-        try t() catch { case e: Throwable => failure.compareAndSet(null, e); () })
+    val failures = new Array[Throwable](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (t, i) =>
+      new Thread(() => try t() catch { case e: Throwable => failures(i) = e })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
-    val f = failure.get()
-    if (f != null) throw f
+    failures.filter(_ != null)
+      .reduceOption { (first, e) => first.addSuppressed(e); first }
+      .foreach(e => throw e)
+  }
+
+  /** The cuts one [[runDeltas]] call makes (`localCheckpoint`s of the
+    * frames it builds), released together when the call ends along
+    * with every persist the cut plans hold (the dedup probe bands and
+    * connected-components labels). Only RDDs that were not persisted
+    * when the call began are released, so a caller's own cached batch
+    * or embeddings frame stays cached. Thread-safe: the parallel
+    * groups cut concurrently. */
+  private final class Cuts(spark: SparkSession) {
+    private val before = spark.sparkContext.getPersistentRDDs.keySet
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def apply(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint()
+      synchronized { frames += df += c }
+      c
+    }
+    def release(): Unit = synchronized {
+      frames.foreach(Dedup.release(_, keep = before))
+      frames.clear()
+    }
   }
 
   /** The ten delta tables (everything except the three minhash
@@ -167,16 +201,53 @@ object IncrementalRelease {
     "corpus_texts", "holdout_texts", "conv_texts", "nd_reps",
     "conv_reps", "packed", "ledger")
 
+  /** Schemas of the tables [[runDeltas]] reads BEFORE it appends them
+    * — what each reads as while it does not exist yet (day 0). */
+  private val EmptySchemas: Map[String, String] = Map(
+    "id_watermark" -> "max_id BIGINT",
+    "corpus_texts" -> "doc_id BIGINT, source STRING, text STRING",
+    "nd_reps" -> "doc_id BIGINT, rep BIGINT",
+    "conv_texts" -> "doc_id BIGINT, text STRING",
+    "conv_reps" -> "doc_id BIGINT, rep BIGINT",
+    "pack_state" -> "batch_idx BIGINT, grp BIGINT, bin_id BIGINT, fill BIGINT",
+    // a minhash store's `bands` ([[Dedup.corpusIndex]] rows)
+    "bands" -> "id BIGINT, fp STRING, band_idx INT, band_hash INT")
+
+  private def emptyOf(spark: SparkSession, name: String): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(EmptySchemas(name)))
+
+  /** True once a store's build published: its model table (`params`,
+    * `centroids`) lands with the build's one pointer flip, so a
+    * crashed build reads as absent and rebuilds. */
+  private def built(spark: SparkSession, dir: String, model: String): Boolean = {
+    val p = s"${Segments.resolve(spark, dir)}/$model"
+    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(p),
+      spark.sparkContext.hadoopConfiguration)
+      .exists(new org.apache.hadoop.fs.Path(p))
+  }
+
+  /** A minhash store's bands (optionally without one segment), or an
+    * empty index while the store does not exist yet. */
+  private def readMinhash(
+      spark: SparkSession, dir: String, excludeSeg: Option[Long]): DataFrame =
+    if (built(spark, dir, "params"))
+      DedupIndexStore.readMinhash(spark, dir, excludeSeg)
+    else emptyOf(spark, "bands")
+
   /** Read a state table: resolve the live tree (pointer-published
     * compactions), read `rows/`, optionally EXCLUDE one segment (the
     * crash-replay read — a replayed batch must not see its own
     * partially-published deltas), and apply the tombstone filter for
     * doc-keyed tables (a forgotten doc vanishes from every read,
-    * including [[artifact]]'s). */
+    * including [[artifact]]'s). A table with no published segment yet
+    * (day 0, or a crashed first publish) reads as empty. */
   private def readState(
       spark: SparkSession, stateDir: String, name: String,
       excludeSeg: Option[Long], cols: Seq[String]): DataFrame = {
     val root = Segments.resolve(spark, s"$stateDir/$name")
+    if (!Segments.hasSegments(spark, s"$root/rows"))
+      return emptyOf(spark, name).select(cols.map(col): _*)
     val rows = spark.read.parquet(s"$root/rows")
     val kept = excludeSeg match {
       case Some(s) => rows.filter(col("seg") =!= s)
@@ -192,14 +263,13 @@ object IncrementalRelease {
       cols: String*): DataFrame =
     readState(spark, stateDir, name, None, cols)
 
-  /** Append a delta: idempotent explicit-segment publish under a
-    * `batchId` (replay-safe), auto-numbered append without. */
+  /** Append a delta: idempotent publish at an explicit segment id
+    * (replay-safe), auto-numbered append without. */
   private def app(spark: SparkSession, stateDir: String, name: String,
-      rows: DataFrame, batchId: Option[Long] = None): Unit =
-    batchId match {
-      case Some(b) =>
-        Segments.publishToStore(spark, s"$stateDir/$name", "rows", rows,
-          segIdOf(b))
+      rows: DataFrame, segId: Option[Long] = None): Unit =
+    segId match {
+      case Some(s) =>
+        Segments.publishToStore(spark, s"$stateDir/$name", "rows", rows, s)
         ()
       case None =>
         Segments.appendToStore(spark, s"$stateDir/$name", "rows", rows)
@@ -231,108 +301,43 @@ object IncrementalRelease {
     (ra.get, rb.get)
   }
 
-  /** `dup_of_<id>` ledger reasons back to the rep id. */
-  private def parseReps(rejects: DataFrame): DataFrame =
-    rejects.select(col("doc_id"),
-      regexp_extract(col("reason"), "dup_of_(-?\\d+)", 1)
-        .cast("long").as("rep"))
-
   /** The semantic-probe corpus shape ([[Dedup.semanticCorpusIndex]])
     * from a persisted plain-IVF `assigned` table. */
   private def annCorpus(assigned: DataFrame): DataFrame =
     assigned.select(col("id").as("cid"), col("vec").as("cvec"),
       SimilarityFunctions.norm(col("vec")).as("cnrm"), col("cell"))
 
-  /** Bootstrap the standing state from a COMPLETED durable day-0 run
-    * ([[ReleaseRun]] — its stage tables are exactly the per-stage
-    * corpora the stores index). One-time, day-0-corpus-sized; every
-    * subsequent [[run]] touches history only through the stores. */
-  def bootstrap(
-      spark: SparkSession,
-      runDir: String,
-      stateDir: String,
-      cfg: ReleaseConfig = ReleaseConfig()): Unit = {
-    def st(name: String) = spark.read.parquet(s"$runDir/stages/$name")
-    val s2 = st("s2_exact").select("doc_id", "source", "text")
-    val holdout = st("s4_split").filter(col("split") === "test")
-      .select("doc_id", "text")
-    val testEmb = st("s5_test_emb").select("vec_id", "embedding")
-    val aturns = st("s6_aturns")
-    val packed = st("s6_packed")
-      .select("doc_id", "grp", "n_tokens", "loss_tokens", "bin_id")
-    val keep = st("s5_keep")
-    val ledger = st("s9_ledger").select("doc_id", "stage", "reason")
-    val input = st("s0_input")
+  /** True once a day 0 released into `stateDir` as batch 0 published
+    * every delta: each state table holds a segment and all four stores
+    * are built. A day 0 that halted or crashed part-way reads false —
+    * what [[bootstrap]] refuses to adopt, what a streamed batch refuses
+    * to release against, and what lets a re-run of a finished
+    * [[ReleaseRun]] skip straight to its artifact. */
+  private[graft] def released(spark: SparkSession, stateDir: String): Boolean =
+    StateTables.forall(t => Segments.hasSegments(spark,
+      s"${Segments.resolve(spark, s"$stateDir/$t")}/rows")) &&
+      Seq("corpus_minhash", "holdout_minhash", "conv_minhash")
+        .forall(s => built(spark, s"$stateDir/$s", "params")) &&
+      built(spark, s"$stateDir/holdout_ann", "centroids")
 
-    val convs = Release.convoTexts(aturns)
-    // EVERY bootstrap write below targets its own directory and
-    // nothing in bootstrap reads the state back — one parallel group
-    // (guide §2.6). Before this the 4 store builds + 11 table appends
-    // ran as ~15 sequential small jobs; now the kmeans training (the
-    // long pole) overlaps all of them.
-    inParallel(
-      () => labeled(spark, "bootstrap: corpus minhash store") {
-        DedupIndexStore.buildMinhash(spark, s"$stateDir/corpus_minhash",
-          s2, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
-          cfg.dedup.bands)
-        ()
-      },
-      () => labeled(spark, "bootstrap: holdout minhash store") {
-        DedupIndexStore.buildMinhash(spark, s"$stateDir/holdout_minhash",
-          holdout, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
-          cfg.decontam.bands)
-        ()
-      },
-      // the FROZEN semantic model: the same deterministic training the
-      // pipeline's stage 5 runs (day-0 holdout embeddings)
-      () => labeled(spark, "bootstrap: ann store") {
-        val cents = Similarity.kmeansCentroidsDistributed(
-          testEmb, "vec_id", "embedding",
-          nlist = cfg.decontam.semanticNlist, iters = cfg.decontam.semanticIters)
-        AnnIndex.buildAndWriteIvf(spark, s"$stateDir/holdout_ann",
-          testEmb, "vec_id", "embedding", cents)
-      },
-      () => labeled(spark, "bootstrap: conv minhash store") {
-        DedupIndexStore.buildMinhash(spark, s"$stateDir/conv_minhash",
-          convs, "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
-          cfg.dedup.bands)
-        ()
-      },
-      () => labeled(spark, "bootstrap: state tables") {
-        inParallel(
-          () => app(spark, stateDir, "corpus_texts", s2),
-          () => app(spark, stateDir, "holdout_texts", holdout),
-          () => app(spark, stateDir, "conv_texts", convs),
-          () => app(spark, stateDir, "nd_reps", parseReps(st("s3_nd_rejects"))),
-          () => app(spark, stateDir, "conv_reps", parseReps(st("s6_dup_rejects"))),
-          () => app(spark, stateDir, "packed", packed),
-          () => app(spark, stateDir, "pack_state",
-            packTail(packed, batchIdx = 0L)),
-          () => app(spark, stateDir, "ledger", ledger),
-          () => app(spark, stateDir, "manifest_states", Profile.manifestStates(
-            keep.join(packed.select("doc_id").distinct(), "doc_id"),
-            "source", "text")),
-          () => app(spark, stateDir, "id_watermark",
-            input.agg(max(col("doc_id")).as("max_id"))
-              .filter(col("max_id").isNotNull)),
-          () => {
-            val r = input.agg(count(col("doc_id")).as("n"),
-              sum(col("doc_id")).as("s")).head()
-            val a = packed.select("doc_id")
-              .unionByName(ledger.select("doc_id"))
-              .agg(count(col("doc_id")).as("n"),
-                sum(col("doc_id")).as("s")).head()
-            def l(row: org.apache.spark.sql.Row, i: Int) =
-              if (row.isNullAt(i)) 0L else row.getLong(i)
-            app(spark, stateDir, "reconcile",
-              spark.createDataFrame(java.util.Arrays.asList(
-                org.apache.spark.sql.Row(r.getLong(0), l(r, 1),
-                  a.getLong(0), l(a, 1))),
-                org.apache.spark.sql.types.StructType.fromDDL(
-                  "n_input BIGINT, sum_input BIGINT, " +
-                    "n_acc BIGINT, sum_acc BIGINT")))
-          })
-      })
+  /** Adopt a COMPLETED day-0 release run ([[ReleaseRun.run]], whose
+    * day 0 released as batch 0 into `<runDir>/state`) as the standing
+    * state at `stateDir`: one directory rename, no Spark job. A day 0
+    * that has not published every delta ([[released]]) refuses — re-run
+    * it first. Every subsequent [[run]] touches history only through
+    * the stores. The run directory keeps its digest-verified artifact. */
+  def bootstrap(spark: SparkSession, runDir: String, stateDir: String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
+    val (from, to) = (new org.apache.hadoop.fs.Path(s"$runDir/state"),
+      new org.apache.hadoop.fs.Path(stateDir))
+    require(released(spark, from.toString),
+      s"IncrementalRelease: no completely released day-0 state at $from — " +
+        "re-run ReleaseRun.run over the run dir to finish it")
+    require(!fs.exists(to), s"IncrementalRelease: state $to already exists")
+    fs.mkdirs(to.getParent)
+    require(fs.rename(from, to),
+      s"IncrementalRelease: could not adopt $from as the state $to")
   }
 
   /** Per-group next-fit tail of a packed frame: the LAST bin's id and
@@ -396,31 +401,62 @@ object IncrementalRelease {
       merges: () => Seq[(String, String)],
       stateDir: String,
       cfg: ReleaseConfig = ReleaseConfig(),
-      batchId: Option[Long] = None): Unit = {
+      batchId: Option[Long] = None): Unit =
+    runDeltasAt(spark, batchRaw, embeddings, transcriptsOf, merges,
+      stateDir, cfg, batchId.map(segIdOf))
+
+  /** [[runDeltas]] publishing at an explicit segment id (`None`:
+    * auto-numbered), halting with [[ReleaseHalted]] once the
+    * [[StageLabels]] stage `stopAfter` completes — day 0 runs here
+    * from [[ReleaseRun.run]] at `seg=0`. */
+  private[graft] def runDeltasAt(
+      spark: SparkSession,
+      batchRaw: DataFrame,
+      embeddings: DataFrame,
+      transcriptsOf: DataFrame => DataFrame,
+      merges: () => Seq[(String, String)],
+      stateDir: String,
+      cfg: ReleaseConfig,
+      segId: Option[Long],
+      stopAfter: Option[String] = None): Unit = {
     val id = col("doc_id")
-    val excl = batchId.map(segIdOf)
+    require(segId.forall(s => s < Segments.StreamSegBase) ||
+      released(spark, stateDir),
+      s"IncrementalRelease: $stateDir holds no released day 0 — release " +
+        "day 0 with ReleaseRun.run and bootstrap it before streaming batches")
+    val cut = new Cuts(spark)
     // phase marker (guide §1.5) — sequential driver code, so a plain
     // set at each boundary attributes every job (incl. broadcast
-    // children) to its stage; cleared in the terminal finally
-    def mark(d: String): Unit = spark.sparkContext.setJobDescription(d)
-    def segX(name: String, cols: String*): DataFrame =
-      readState(spark, stateDir, name, excl, cols)
-    def appX(name: String, rows: DataFrame): Unit =
-      app(spark, stateDir, name, rows, batchId)
-    def appendMh(dir: String, batch: DataFrame): Unit = batchId match {
-      case Some(b) =>
-        DedupIndexStore.appendMinhashAt(spark, dir, batch,
-          "doc_id", "text", segIdOf(b))
-        ()
-      case None =>
-        DedupIndexStore.appendMinhash(spark, dir, batch, "doc_id", "text")
-        ()
+    // children) to its stage; cleared in the terminal finally. Entering
+    // a stage first halts when the previous one is the `stopAfter`.
+    var stage = ""
+    def haltAfterStage(): Unit = if (stopAfter.contains(stage)) throw new ReleaseHalted
+    def mark(label: String, what: String): Unit = {
+      haltAfterStage()
+      stage = label
+      spark.sparkContext.setJobDescription(s"$label: $what")
     }
+    def segX(name: String, cols: String*): DataFrame =
+      readState(spark, stateDir, name, segId, cols)
+    def appX(name: String, rows: DataFrame): Unit =
+      app(spark, stateDir, name, rows, segId)
+    // the empty-state hook of the minhash stores: built from this
+    // batch at seg=0 under the config's banding, appended after
+    def appendMh(dir: String, batch: DataFrame, bands: Int): Unit =
+      if (!built(spark, dir, "params"))
+        DedupIndexStore.buildMinhash(spark, dir, batch, "doc_id", "text",
+          cfg.dedup.shingleN, cfg.dedup.numHashes, bands)
+      else segId match {
+        case Some(s) =>
+          DedupIndexStore.appendMinhashAt(spark, dir, batch, "doc_id", "text", s)
+        case None =>
+          DedupIndexStore.appendMinhash(spark, dir, batch, "doc_id", "text")
+      }
 
     try {
-    mark("incr 1: ingest")
+    mark("incr 1", "ingest")
     // 1 — ingest gates (the shared expression blocks)
-    val input = batchRaw.select(id, col("source"), col("raw")).localCheckpoint()
+    val input = cut(batchRaw.select(id, col("source"), col("raw")))
 
     // the monotone-id fence: the equality contract is only a theorem
     // when every batch id exceeds every stored id — enforce it against
@@ -440,19 +476,18 @@ object IncrementalRelease {
           "above the watermark, or re-release from scratch.")
 
     val raw = Release.withEncOk(input)
-    val gated = Release.scoredGates(raw, cfg).localCheckpoint()
+    val gated = cut(Release.scoredGates(raw, cfg))
     val (encRejects, gateRejects) = Release.ingestRejectRows(raw, gated)
     val ingested = Release.ingestedRows(gated)
 
-    mark("incr 2: exact")
+    mark("incr 2", "exact")
     // 2 — exact dedup: cross (store fingerprints, keeper = the stored
     // exact survivor — the union window's min id) then within-batch.
     // The keeper probe reduces the store FIRST by a broadcast
     // semi-join on the batch's fingerprint set, so the distinct
     // shuffles only the matched survivors (batch-bounded), never the
     // corpus-sized index.
-    val storeBands = DedupIndexStore.readMinhash(
-      spark, s"$stateDir/corpus_minhash", excl)
+    val storeBands = readMinhash(spark, s"$stateDir/corpus_minhash", segId)
     val fp = ingested.withColumn("__fp", TextFunctions.fingerprint(col("text")))
     val keeperByFp = keeperByFpFrame(storeBands, fp)
     val crossExactRejects = fp.join(keeperByFp, "__fp")
@@ -464,10 +499,10 @@ object IncrementalRelease {
     val withinExactRejects = afterCross.filter(id =!= col("__keep"))
       .select(id, lit("exact").as("stage"),
         concat(lit("dup_of_"), col("__keep").cast("string")).as("reason"))
-    val batchExact = afterCross.filter(id === col("__keep"))
-      .select(id, col("source"), col("text")).localCheckpoint()
+    val batchExact = cut(afterCross.filter(id === col("__keep"))
+      .select(id, col("source"), col("text")))
 
-    mark("incr 3: neardup")
+    mark("incr 3", "neardup")
     // 3 — near-dup: ONE connected-components pass over the union
     // graph's batch-touching edges — cross matches (batch doc → its
     // day-N cluster rep, through the standing rep table) ∪ the
@@ -486,64 +521,61 @@ object IncrementalRelease {
     // (guide §2.6; the cross probe is the long pole and the
     // within-batch sweep hides under it)
     val (crossNd, batchNdPairs) = par2(
-      Dedup.dedupAgainstMatches(batchExact, corpusTexts,
+      cut(Dedup.dedupAgainstMatches(batchExact, corpusTexts,
           "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
           cfg.dedup.bands, cfg.dedup.jaccardThreshold,
           maxBucketSize = cfg.dedup.maxBucketSize,
-          index = Some(storeBands), pruneIndexToProbe = pruneProbes)
+          index = Some(storeBands), pruneIndexToProbe = true)
         .join(ndRepMap, Seq("cid"), "left")
-        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))
-        .localCheckpoint(),
-      Dedup.minhashPairs(batchExact, "doc_id", "text",
+        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
+      cut(Dedup.minhashPairs(batchExact, "doc_id", "text",
           cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
           cfg.dedup.jaccardThreshold,
           maxBucketSize = cfg.dedup.maxBucketSize)
-        .select("id_a", "id_b")
-        .localCheckpoint())
-    val ndCc = Dedup.connectedComponents(batchNdPairs.unionByName(
+        .select("id_a", "id_b")))
+    val ndCc = cut(Dedup.connectedComponents(batchNdPairs.unionByName(
         crossNd.select(col("id").as("id_a"), col("rep").as("id_b"))))
       .filter(col("id") =!= col("rep"))
       // batch rows only: day-N rep nodes ride along in the graph, and
       // under the no-bridge contract each is its own component min
       // (so the id =!= rep filter already removed it) — the semi-join
       // makes that structural rather than assumed
-      .join(batchExact.select(id.as("id")), Seq("id"), "left_semi")
-      .localCheckpoint()
+      .join(batchExact.select(id.as("id")), Seq("id"), "left_semi"))
     val ndRejects = ndCc.select(col("id").as("doc_id"),
       lit("neardup").as("stage"),
       concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
-    val batchNd = batchExact.join(ndCc.select(col("id").as("doc_id")),
-      Seq("doc_id"), "left_anti").localCheckpoint()
+    val batchNd = cut(batchExact.join(ndCc.select(col("id").as("doc_id")),
+      Seq("doc_id"), "left_anti"))
 
-    mark("incr 3b: store appends")
+    mark("incr 3b", "store appends")
     // the corpus stores grow by the batch's exact survivors NOW —
     // tomorrow's batch probes today's. Three independent writes to
     // three directories over checkpointed frames — overlapped
     // (guide §2.6); nothing below reads these tables this run.
     inParallel(
-      () => appendMh(s"$stateDir/corpus_minhash", batchExact),
+      () => appendMh(s"$stateDir/corpus_minhash", batchExact, cfg.dedup.bands),
       () => appX("corpus_texts", batchExact),
       () => appX("nd_reps", ndCc.select(col("id").as("doc_id"), col("rep"))))
 
-    mark("incr 4: split")
+    mark("incr 4", "split")
     // 4 — split; the holdout stores grow BEFORE the decontam probe so
     // batch-tv-vs-batch-holdout hits surface exactly like the union's
     val split = Sampling.hashSplit(batchNd, "doc_id",
       cfg.split.trainPct, cfg.split.valPct)
-    val batchHold = split.filter(col("split") === "test")
-      .select(id, col("text")).localCheckpoint()
+    val batchHold = cut(split.filter(col("split") === "test")
+      .select(id, col("text")))
     val holdoutRejects = batchHold
       .select(id, lit("holdout").as("stage"), lit("test").as("reason"))
-    val batchTv = split.filter(col("split") =!= "test")
-      .select(id, col("source"), col("text")).localCheckpoint()
+    val batchTv = cut(split.filter(col("split") =!= "test")
+      .select(id, col("source"), col("text")))
     // both must land BEFORE the decontam reads below (append-then-read
     // order) — they are independent of each other, so overlap the two
     // and barrier here
     inParallel(
-      () => appendMh(s"$stateDir/holdout_minhash", batchHold),
+      () => appendMh(s"$stateDir/holdout_minhash", batchHold, cfg.decontam.bands),
       () => appX("holdout_texts", batchHold))
 
-    mark("incr 5: decontam")
+    mark("incr 5", "decontam")
     // 5 — decontam: lexical first-fail vs the grown holdout store,
     // then semantic vs the persisted ANN index (frozen centroids).
     // These holdout reads deliberately INCLUDE the batch's own just-
@@ -555,27 +587,32 @@ object IncrementalRelease {
     // until semRejects/keep below — run the two materializations
     // concurrently (guide §2.6); the append-then-read order INSIDE
     // the semantic thread is preserved
+    val annDir = s"$stateDir/holdout_ann"
     val (lexOkIds, semHits) = par2(
-      Dedup.dedupAgainst(batchTv, holdTexts, "doc_id", "text",
+      cut(Dedup.dedupAgainst(batchTv, holdTexts, "doc_id", "text",
           cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.decontam.bands,
           cfg.decontam.jaccardThreshold,
           index = Some(DedupIndexStore.readMinhash(spark, s"$stateDir/holdout_minhash")),
-          pruneIndexToProbe = pruneProbes)
-        .select("doc_id").localCheckpoint(),
+          pruneIndexToProbe = true)
+        .select("doc_id")),
       {
         val batchTestEmb = embeddings.join(
           batchHold.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
-        batchId match {
-          case Some(b) =>
-            AnnIndex.appendToIvfAt(spark, s"$stateDir/holdout_ann",
-              batchTestEmb, "vec_id", "embedding", segIdOf(b))
-            ()
+        if (!built(spark, annDir, "centroids")) {
+          // the empty-state hook: the FROZEN semantic model, trained on
+          // this batch's holdout embeddings (the from-scratch pipeline's
+          // stage-5 training)
+          val testEmb = cut(batchTestEmb)
+          AnnIndex.buildAndWriteIvf(spark, annDir, testEmb, "vec_id", "embedding",
+            Similarity.kmeansCentroidsDistributed(testEmb, "vec_id", "embedding",
+              nlist = cfg.decontam.semanticNlist, iters = cfg.decontam.semanticIters))
+        } else segId match {
+          case Some(s) =>
+            AnnIndex.appendToIvfAt(spark, annDir, batchTestEmb, "vec_id", "embedding", s)
           case None =>
-            AnnIndex.appendToIvf(spark, s"$stateDir/holdout_ann",
-              batchTestEmb, "vec_id", "embedding")
-            ()
+            AnnIndex.appendToIvf(spark, annDir, batchTestEmb, "vec_id", "embedding")
         }
-        val ann = AnnIndex.readIvf(spark, s"$stateDir/holdout_ann")
+        val ann = AnnIndex.readIvf(spark, annDir)
         val batchTvEmb = embeddings.join(
           batchTv.select(id.as("vec_id")), Seq("vec_id"), "left_semi")
         val semOkIds = Dedup.semanticDedupAgainst(
@@ -584,53 +621,48 @@ object IncrementalRelease {
             maxClusterSize = cfg.decontam.semanticMaxCluster,
             index = Some(annCorpus(ann.assigned)))
           .select(col("vec_id").as("doc_id"))
-        batchTvEmb.select(col("vec_id").as("doc_id"))
-          .join(semOkIds, Seq("doc_id"), "left_anti").localCheckpoint()
+        cut(batchTvEmb.select(col("vec_id").as("doc_id"))
+          .join(semOkIds, Seq("doc_id"), "left_anti"))
       })
     val lexRejects = batchTv.select("doc_id")
       .join(lexOkIds, Seq("doc_id"), "left_anti")
       .select(id, lit("decontam").as("stage"), lit("lexical").as("reason"))
     val semRejects = semHits.join(lexOkIds, Seq("doc_id"), "left_semi")
       .select(id, lit("decontam").as("stage"), lit("semantic").as("reason"))
-    val keep = batchTv.join(lexOkIds, Seq("doc_id"), "left_semi")
-      .join(semHits, Seq("doc_id"), "left_anti").localCheckpoint()
+    val keep = cut(batchTv.join(lexOkIds, Seq("doc_id"), "left_semi")
+      .join(semHits, Seq("doc_id"), "left_anti"))
 
-    mark("incr 6: sft")
+    mark("incr 6", "sft")
     // 6 — SFT endgame over the batch survivors; conversation dedup is
     // the same combined-edge CC decomposition as stage 3
-    val turns = Chat.parseToolTurns(
-      transcriptsOf(keep.select("doc_id", "text")), "doc_id", "transcript")
-      .localCheckpoint()
+    val turns = cut(Chat.parseToolTurns(
+      transcriptsOf(keep.select("doc_id", "text")), "doc_id", "transcript"))
     val (contractRejects, toolRejects, admitted) =
       Release.sftGateRows(turns, cfg.sft.toolNames)
-    val aturns = turns.join(admitted, "doc_id").localCheckpoint()
-    val convs = Release.convoTexts(aturns).localCheckpoint()
+    val aturns = cut(turns.join(admitted, "doc_id"))
+    val convs = cut(Release.convoTexts(aturns))
     val convTexts = segX("conv_texts", "doc_id", "text")
     val convRepMap = segX("conv_reps", "doc_id", "rep")
       .select(col("doc_id").as("cid"), col("rep"))
     // same concurrent pair-generation split as stage 3 (guide §2.6)
     val (crossConv, convPairs) = par2(
-      Dedup.dedupAgainstMatches(convs, convTexts,
+      cut(Dedup.dedupAgainstMatches(convs, convTexts,
           "doc_id", "text", cfg.dedup.shingleN, cfg.dedup.numHashes,
           cfg.dedup.bands, cfg.dedup.jaccardThreshold,
           maxBucketSize = cfg.dedup.maxBucketSize,
-          index = Some(DedupIndexStore.readMinhash(
-            spark, s"$stateDir/conv_minhash", excl)),
-          pruneIndexToProbe = pruneProbes)
+          index = Some(readMinhash(spark, s"$stateDir/conv_minhash", segId)),
+          pruneIndexToProbe = true)
         .join(convRepMap, Seq("cid"), "left")
-        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))
-        .localCheckpoint(),
-      Dedup.minhashPairs(convs, "doc_id", "text",
+        .select(col("id"), coalesce(col("rep"), col("cid")).as("rep"))),
+      cut(Dedup.minhashPairs(convs, "doc_id", "text",
           cfg.dedup.shingleN, cfg.dedup.numHashes, cfg.dedup.bands,
           cfg.dedup.jaccardThreshold,
           maxBucketSize = cfg.dedup.maxBucketSize)
-        .select("id_a", "id_b")
-        .localCheckpoint())
-    val convCc = Dedup.connectedComponents(convPairs.unionByName(
+        .select("id_a", "id_b")))
+    val convCc = cut(Dedup.connectedComponents(convPairs.unionByName(
         crossConv.select(col("id").as("id_a"), col("rep").as("id_b"))))
       .filter(col("id") =!= col("rep"))
-      .join(convs.select(id.as("id")), Seq("id"), "left_semi")
-      .localCheckpoint()
+      .join(convs.select(id.as("id")), Seq("id"), "left_semi"))
     val sftDupRejects = convCc.select(col("id").as("doc_id"),
       lit("sft_dedup").as("stage"),
       concat(lit("dup_of_"), col("rep").cast("string")).as("reason"))
@@ -638,38 +670,38 @@ object IncrementalRelease {
     // with the BPE costing (reads only the checkpointed aturns/convCc)
     // and the pack-state tail read (a table none of these writes
     // touch), the two expensive materializations that follow
+    // the caller's merges thunk runs on THIS thread, never a worker: a
+    // thunk that takes a monitor the caller holds (a lazy val) would
+    // otherwise deadlock against the join below
+    val mergeRules = merges()
     var conv0: DataFrame = null
     var tail0: DataFrame = null
     inParallel(
-      () => appendMh(s"$stateDir/conv_minhash", convs),
+      () => appendMh(s"$stateDir/conv_minhash", convs, cfg.dedup.bands),
       () => appX("conv_texts", convs),
       () => appX("conv_reps", convCc.select(col("id").as("doc_id"), col("rep"))),
       () => {
-        conv0 = Release.convCosted(aturns, merges(),
+        conv0 = cut(Release.convCosted(aturns, mergeRules,
             cfg.sft.turnOverhead, cfg.sft.groups)
-          .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        ()
+          .join(sftDupRejects.select("doc_id"), Seq("doc_id"), "left_anti"))
       },
-      () => { tail0 = latestPackState(spark, stateDir, excl).localCheckpoint(); () })
+      () => tail0 = cut(latestPackState(spark, stateDir, segId)))
     val conv = conv0
 
-    mark("incr 7: pack")
+    mark("incr 7", "pack")
     // append-only packing: today's conversations continue yesterday's
     // per-group tail bins — byte-identical to one from-scratch
     // next-fit over the union in id order
     val tail = tail0
-    val batchPacked = Packing.packBinsByCountFrom(conv, "doc_id", "grp",
+    val batchPacked = cut(Packing.packBinsByCountFrom(conv, "doc_id", "grp",
         "n_tokens", cfg.pack.capacity, tail.select("grp", "bin_id", "fill"))
       .select(col("id").as("doc_id"), col("grp"), col("n_tokens"),
         col("bin_id"))
       .join(conv.select("doc_id", "loss_tokens"), "doc_id")
-      .select("doc_id", "grp", "n_tokens", "loss_tokens", "bin_id")
-      .localCheckpoint()
+      .select("doc_id", "grp", "n_tokens", "loss_tokens", "bin_id"))
     appX("packed", batchPacked)
-    // max over an empty tail is NULL (a day 0 that packed nothing
-    // still bootstraps an empty pack_state) — resume at batch 0, not
-    // an NPE
+    // max over an empty tail is NULL (day 0, or a day 0 that packed
+    // nothing) — resume at batch 0, not an NPE
     val batchIdx = tail
       .agg(coalesce(max(col("batch_idx")), lit(-1L))).head().getLong(0) + 1L
     // the new tail per touched group: the batch's last bin, plus the
@@ -682,15 +714,14 @@ object IncrementalRelease {
           .otherwise(lit(0L))).as("fill"))
     appX("pack_state", newTail)
 
-    mark("incr 9: ledger/manifest")
+    mark("incr 9", "ledger/manifest")
     // 9 — ledger + manifest states + watermark + reconcile deltas
-    val ledgerDelta = encRejects.unionByName(gateRejects)
+    val ledgerDelta = cut(encRejects.unionByName(gateRejects)
       .unionByName(crossExactRejects).unionByName(withinExactRejects)
       .unionByName(ndRejects)
       .unionByName(holdoutRejects).unionByName(lexRejects)
       .unionByName(semRejects).unionByName(contractRejects)
-      .unionByName(toolRejects).unionByName(sftDupRejects)
-      .localCheckpoint()
+      .unionByName(toolRejects).unionByName(sftDupRejects))
     // four independent table writes (ledger/manifest/watermark/
     // reconcile) over checkpointed frames — the terminal barrier,
     // overlapped like the other append groups
@@ -716,7 +747,11 @@ object IncrementalRelease {
               "n_input BIGINT, sum_input BIGINT, " +
                 "n_acc BIGINT, sum_acc BIGINT")))
       })
-    } finally spark.sparkContext.setJobDescription(null)
+    haltAfterStage()
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      cut.release()
+    }
   }
 
   /** RIGHT-TO-BE-FORGOTTEN over the standing release state — the

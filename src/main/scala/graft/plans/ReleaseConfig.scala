@@ -44,7 +44,8 @@ final case class ReleaseConfig(
   /** Canonical one-line rendering — folded into the durable run's
     * resume fingerprint so resuming a run dir under a DIFFERENT
     * config refuses typed (a changed threshold silently mixed with
-    * frozen stage tables is the same failure as a changed corpus). */
+    * an already-published state is the same failure as a changed
+    * corpus). */
   def canonical: String = Seq(
     lang, minQuality, minTokens, maxTokens,
     dedup.shingleN, dedup.numHashes, dedup.bands, dedup.jaccardThreshold,

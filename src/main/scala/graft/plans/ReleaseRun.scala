@@ -1,136 +1,47 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.Release
 
-/** Internal control-flow signal: a staged run configured with
-  * `stopAfter` reached its stop point (the crash-simulation hook the
-  * resume spec drives). Never escapes [[ReleaseRun.run]]. */
-private[graft] final class ReleaseHalted extends RuntimeException
-
-/** The DURABLE, RESUMABLE form of the release pipeline
-  * ([[graft.operators.Release.pipeline]]): every stage boundary is a
-  * real parquet table under `<outDir>/stages/<name>`, published with
-  * one atomic rename, so
+/** The DURABLE, RESUMABLE release run: day 0 released as batch 0 of
+  * the incremental runner. Three steps:
   *
-  *   - a run that dies (executor loss, OOM, preemption) RESUMES from
-  *     its last completed stage: [[DurableStager]] skips the builder
-  *     thunk of any stage whose table already exists — including the
-  *     driver-side loops (BPE training, k-means, pointer-doubling
-  *     connected components) that run inside a thunk;
-  *   - a finished run RE-RUNS idempotently: every stage skips, only
-  *     the terminal digest verification re-executes (an integrity
-  *     re-check, not a recompute);
-  *   - the stage tables themselves are the queryable audit surface a
-  *     real 100 TB release keeps (what survived stage N, and why the
-  *     rest left — the ledger's provenance in durable form).
+  *   1. the run fingerprint check ([[verifyRunFingerprint]]): a re-run
+  *      must be re-running THE SAME run;
+  *   2. [[IncrementalRelease.runDeltas]] over an empty state at
+  *      `<outDir>/state` — every state delta and store segment
+  *      publishes idempotently at `seg=0`, so a run that dies
+  *      (executor loss, OOM, preemption) RESUMES by re-running: each
+  *      publish that already landed is a no-op, and a resumed day 0
+  *      neither retrains nor re-appends the frozen semantic model. A
+  *      day 0 that published everything
+  *      ([[IncrementalRelease.released]]) is not recomputed at all;
+  *   3. the digest-verified artifact: [[IncrementalRelease.artifact]]
+  *      written through the [[graft.sources.ParquetDirIO]] staged
+  *      write plus the [[graft.operators.Reconcile.assertClean]]
+  *      digest gate, read back as a consumer reads it.
   *
-  * Crash posture per stage: compute → write to
-  * `<outDir>/_staging/<name>-<uuid>` → ONE rename to
-  * `<outDir>/stages/<name>`. A crash mid-write leaves only staging
-  * (ignored and overwritten by the resume); presence of the final
-  * directory IS the completion marker — there is no separate marker
-  * file to race. The terminal artifact goes through the
-  * [[graft.sources.ParquetDirIO]] staged write plus the
-  * [[graft.operators.Reconcile.assertClean]] digest gate, exactly
-  * like the in-query form.
-  *
-  * The in-query twin (`q_pipeline_release`) and this runner execute
-  * the SAME [[Release.pipeline]] function, and the catalog gates both
-  * under the same DuckDB CTE-pyramid oracle (`q_pipeline_release` /
-  * `q_pipeline_release_run`) — the two forms are pinned equal.
+  * The state is the release's queryable audit surface — its `ledger`
+  * records why every rejected doc left and at which stage — and
+  * [[IncrementalRelease.bootstrap]] adopts it as the standing state
+  * later batches release against. The catalog gates this form
+  * (`q_pipeline_release_run`) under the same DuckDB CTE-pyramid oracle
+  * as the from-scratch [[graft.operators.Release.pipeline]]
+  * (`q_pipeline_release`), so the two are pinned row-identical.
   */
 object ReleaseRun {
 
-  /** Stage-boundary materializer over parquet stage tables. */
-  final class DurableStager(
-      spark: SparkSession,
-      outDir: String,
-      stopAfter: Option[String] = None) extends Release.Stager {
-
-    /** Stage names whose builder thunk RAN this invocation (resumed
-      * stages never appear — the convergence spec's probe). */
-    val evaluated = scala.collection.mutable.ArrayBuffer.empty[String]
-    private var halted = false
-    /** True once the `stopAfter` stage materialized. */
-    def haltedNow: Boolean = halted
-
-    private def fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-
-    /** `<name>-<uuid>` — the staging naming pattern; a child of a
-      * PUBLISHED stage table matching it is a nested rename-race
-      * loser (see below) whose delete was interrupted by a crash. */
-    private def sweepNestedLosers(
-        f: org.apache.hadoop.fs.FileSystem,
-        dir: org.apache.hadoop.fs.Path,
-        name: String): Unit = {
-      val loser = (java.util.regex.Pattern.quote(name) +
-        "-[0-9a-fA-F-]{36}").r
-      f.listStatus(dir).foreach { st =>
-        if (st.isDirectory && loser.matches(st.getPath.getName))
-          f.delete(st.getPath, true)
-      }
-    }
-
-    def apply(name: String)(df: => DataFrame): DataFrame = {
-      if (halted) throw new ReleaseHalted
-      val dir = new org.apache.hadoop.fs.Path(s"$outDir/stages/$name")
-      val f = fs
-      // resume path: before trusting an existing stage table, sweep
-      // any nested loser tree a crash left inside it — the nested
-      // delete below is not atomic with the rename, and a crash in
-      // between leaves the duplicate subtree where no _staging sweep
-      // reaches (it lives INSIDE the published table), so a resumed
-      // read would see duplicate/conflicting children
-      if (f.exists(dir)) sweepNestedLosers(f, dir, name)
-      if (!f.exists(dir)) {
-        evaluated += name
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$outDir/_staging/$name-${java.util.UUID.randomUUID()}")
-        // UI attribution (guide §1.5): every job this stage's builder
-        // spawns — including broadcast-exchange child jobs — carries
-        // the stage name
-        val prevDesc = spark.sparkContext
-          .getLocalProperty("spark.job.description")
-        spark.sparkContext.setJobDescription(s"release stage $name")
-        try df.write.mode("overwrite").parquet(staging.toString)
-        finally spark.sparkContext.setJobDescription(prevDesc)
-        f.mkdirs(dir.getParent)
-        if (f.rename(staging, dir)) {
-          // a rename that "succeeded" may still have lost the publish
-          // race: HDFS rename onto a dir that appeared inside the
-          // exists-to-rename window NESTS src under it and returns
-          // true — our staging tree would sit as a non-underscore
-          // child INSIDE the winner's published table, and every
-          // reader of the stage would double-count its rows. Stage
-          // tables are deterministic (same input, same rows), so the
-          // nested loser tree is a pure duplicate: delete it.
-          val nested = new org.apache.hadoop.fs.Path(dir, staging.getName)
-          if (f.exists(nested)) f.delete(nested, true)
-        } else {
-          // a concurrent runner over the same outDir won the publish —
-          // its table carries the same deterministic rows; sweep ours
-          require(f.exists(dir),
-            s"ReleaseRun: could not publish stage table $dir")
-          f.delete(staging, true)
-        }
-      }
-      if (stopAfter.contains(name)) halted = true
-      spark.read.parquet(dir.toString)
-    }
-  }
-
   /** Execute (or resume) a durable release run. Returns the
     * digest-verified artifact as a consumer reads it, or None when
-    * `stopAfter` halted the run mid-pipeline (the crash simulation).
+    * `stopAfter` halted the run (the crash simulation).
     *
     * @param rawInput   (doc_id, source, raw) crawl rows
     * @param embeddings (vec_id, embedding) side table
-    * @param outDir     the run directory: stage tables under
-    *                   `stages/`, the artifact under `release.parquet`
-    * @param stopAfter  halt after materializing the named stage —
-    *                   spec-only crash injection */
+    * @param outDir     the run directory: the released state under
+    *                   `state/`, the artifact under `release.parquet`
+    * @param stopAfter  halt once the named
+    *                   [[IncrementalRelease.StageLabels]] stage
+    *                   completed (`incr 5`) — spec-only crash
+    *                   injection; an unknown label refuses */
   def run(
       spark: SparkSession,
       rawInput: DataFrame,
@@ -139,23 +50,42 @@ object ReleaseRun {
       merges: () => Seq[(String, String)],
       outDir: String,
       cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig(),
-      stopAfter: Option[String] = None): Option[DataFrame] =
-    runWithStager(spark, rawInput, embeddings, transcriptsOf, merges,
-      outDir, new DurableStager(spark, outDir, stopAfter), cfg)
+      stopAfter: Option[String] = None): Option[DataFrame] = {
+    stopAfter.foreach(IncrementalRelease.requireStageLabel)
+    verifyRunFingerprint(spark, rawInput, embeddings, outDir, cfg)
+    val state = s"$outDir/state"
+    // a day 0 that published every delta completed every stage: a
+    // re-run goes straight to the artifact
+    val done = IncrementalRelease.released(spark, state)
+    if (done && stopAfter.isDefined) return None
+    if (!done) try IncrementalRelease.runDeltasAt(spark, rawInput, embeddings,
+      transcriptsOf, merges, state, cfg, segId = Some(0L), stopAfter)
+    catch { case _: ReleaseHalted => return None }
+    // terminal: the digest-verified artifact, persisted once for the
+    // write + checksum + read-back triple (its inputs are state-table
+    // scans, so the persist is parts-sized, never corpus lineage)
+    val out = IncrementalRelease.artifact(spark, state, cfg.pack.numShards)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val io = new graft.sources.ParquetDirIO(spark, outDir, outDir)
+      io.writeTarget("release", out)
+      graft.operators.Reconcile.assertClean(io, Map("release" -> out))
+      Some(io.readTarget("release"))
+    } finally out.unpersist()
+  }
 
-  /** A resumed run must be resuming THE SAME run: the stage tables
-    * freeze the original input, but the live side inputs (the
-    * embeddings joins, the tokenizer training) re-read the source on
-    * resume — resuming yesterday's run dir against today's corpus
-    * would silently mix the two and the terminal digest gate (which
-    * checks write-vs-read consistency, not freshness) would bless the
-    * mixture. So the first run records, and every resume re-verifies
-    * against the LIVE inputs: a CONTENT digest of the crawl rows
-    * (count + id sum + an xxhash64 fold over (source, raw) — a
-    * re-crawl that keeps ids but changes text must refuse, not just
-    * an id-set change), the same for the embeddings side table
-    * (swapped vectors would silently re-score stage 5), and the
-    * config knobs. Two aggregate scans, the price of refusing the
+  /** A resumed run must be resuming THE SAME run: the state already
+    * published froze the original input, but a resume re-reads the
+    * live inputs — resuming yesterday's run dir against today's
+    * corpus would silently return (or mix into) the old release, and
+    * the terminal digest gate (which checks write-vs-read consistency,
+    * not freshness) would bless it. So the first run records, and
+    * every resume re-verifies against the LIVE inputs: a CONTENT
+    * digest of the crawl rows (count + id sum + an xxhash64 fold over
+    * (source, raw) — a re-crawl that keeps ids but changes text must
+    * refuse, not just an id-set change), the same for the embeddings
+    * side table (swapped vectors would silently re-score stage 5), and
+    * the config knobs. Two aggregate scans, the price of refusing the
     * worst silent failure a resumable pipeline has. Mismatch refuses
     * typed: use a fresh run dir. */
   private def verifyRunFingerprint(
@@ -203,43 +133,7 @@ object ReleaseRun {
       s"ReleaseRun: refusing to resume $outDir — the live input/config " +
         s"fingerprint ($now) does not match the run's recorded one " +
         s"($recorded). Resuming would silently mix the original run's " +
-        "frozen stage tables with a different corpus; use a fresh run " +
+        "published state with a different corpus; use a fresh run " +
         "directory (or --fresh=true).")
-  }
-
-  private[graft] def runWithStager(
-      spark: SparkSession,
-      rawInput: DataFrame,
-      embeddings: DataFrame,
-      transcriptsOf: DataFrame => DataFrame,
-      merges: () => Seq[(String, String)],
-      outDir: String,
-      st: DurableStager,
-      cfg: graft.plans.ReleaseConfig = graft.plans.ReleaseConfig()): Option[DataFrame] = {
-    verifyRunFingerprint(spark, rawInput, embeddings, outDir, cfg)
-    // sweep staging trees a CRASHED run abandoned (subtree untouched
-    // for an hour — a live concurrent runner's in-flight staging is
-    // never touched); without this, repeated crash/resume cycles
-    // accumulate orphan full-stage-size parquet trees indefinitely
-    graft.sources.Segments.sweepStaleChildren(
-      org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(s"$outDir/_staging"))
-    val parts =
-      try Release.pipeline(spark, rawInput, embeddings, transcriptsOf,
-        merges, st, cfg)
-      catch { case _: ReleaseHalted => return None }
-    // stopAfter on the FINAL stage halts before the terminal write too
-    if (st.haltedNow) return None
-    // terminal: the digest-verified artifact, persisted once for the
-    // write + checksum + read-back triple (its inputs are stage-table
-    // scans, so the persist is parts-sized, never corpus lineage)
-    val out = parts.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val io = new graft.sources.ParquetDirIO(spark, outDir, outDir)
-      io.writeTarget("release", out)
-      graft.operators.Reconcile.assertClean(io, Map("release" -> out))
-      Some(io.readTarget("release"))
-    } finally out.unpersist()
   }
 }

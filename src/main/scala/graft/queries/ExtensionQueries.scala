@@ -3511,7 +3511,7 @@ object ExtensionQueries {
     * between the 0.5 dedup bar and the 0.35 decontam bar; %43 markup
     * variant only the conversation-level dedup catches), each wrapped
     * in the boilerplate + the id%23 encoding pathology. Shared by the
-    * in-query pipeline, the durable [[graft.plans.ReleaseRun]] twin
+    * from-scratch pipeline, the durable [[graft.plans.ReleaseRun]]
     * (`q_pipeline_release_run`), and the CLI ([[graft.ReleaseApp]]) —
     * one construction, one oracle. */
   private[graft] def releaseRawInput(s: SparkSession, dir: String): DataFrame = {
@@ -3550,15 +3550,14 @@ object ExtensionQueries {
       .map(r => (r.getString(0), r.getString(1))).toSeq
 
   private val qPipelineRelease: Q = (s, dir) => {
-    // the shared nine-stage dataflow ([[graft.operators.Release]]) in
-    // its IN-QUERY form: localCheckpoint stage cuts. The durable twin
-    // (q_pipeline_release_run) runs the SAME function with parquet
-    // stage tables — both gated by the same CTE-pyramid oracle.
+    // the from-scratch nine-stage dataflow ([[graft.operators.Release]])
+    // in-query, localCheckpoint stage cuts. The durable run
+    // (q_pipeline_release_run) releases the same corpus as day 0 of the
+    // incremental runner — both gated by the same CTE-pyramid oracle.
     val out = graft.operators.Release.pipeline(s,
         releaseRawInput(s, dir), pq(s, dir, "embeddings"),
         keep => sftTranscriptsOf(s, keep),
-        () => releaseMerges(s, dir),
-        new graft.operators.Release.LocalStager)
+        () => releaseMerges(s, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // write the release artifact and digest-verify it with the real
@@ -3573,18 +3572,18 @@ object ExtensionQueries {
     } finally out.unpersist()
   }
 
-  /** The DURABLE twin of [[qPipelineRelease]]
-    * ([[graft.plans.ReleaseRun]]): the SAME shared
-    * [[graft.operators.Release.pipeline]] dataflow, but every stage
-    * boundary is a real parquet stage table published with an atomic
-    * rename — the form a real 100 TB release runs (resume from the
-    * last completed stage, idempotent re-verify, queryable per-stage
-    * audit tables). Gated by the SAME CTE-pyramid oracle as the
-    * in-query form, so the two forms are pinned equal row-for-row.
-    * The run directory is cleared first: the gated query always
-    * measures a FULL fresh run of the current code (resume semantics
-    * are spec-pinned by ReleaseRunSpec's crash-at-each-stage drill,
-    * not by this query). */
+  /** The DURABLE release run ([[graft.plans.ReleaseRun]]) of the
+    * corpus [[qPipelineRelease]] releases from scratch: day 0 as batch
+    * 0 of [[graft.plans.IncrementalRelease.runDeltas]] over an empty
+    * state, every state delta published idempotently at `seg=0` (a
+    * crashed run resumes by re-running; the state's ledger is the
+    * queryable audit surface), then the digest-verified artifact.
+    * Gated by the SAME CTE-pyramid oracle as the from-scratch form,
+    * so the two are pinned equal row-for-row. The run directory is
+    * cleared first: the gated query always measures a FULL fresh run
+    * of the current code (resume semantics are spec-pinned by
+    * ReleaseRunSpec's halt-after-every-stage drill, not by this
+    * query). */
   private val qPipelineReleaseRun: Q = (s, dir) => {
     val outDir = s"$twinRoot/release_run/${new java.io.File(dir).getName}"
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -3699,10 +3698,11 @@ object ExtensionQueries {
   }
 
   /** The INCREMENTAL release ([[graft.plans.IncrementalRelease]]) —
-    * day 0 releases from scratch (the durable [[graft.plans.ReleaseRun]]
-    * form), its stage tables bootstrap the standing state (minhash /
-    * holdout / conversation / ANN stores + append-only delta tables),
-    * and day 1's crawl batch ([[crawl3RawBatch]]) releases in
+    * day 0 releases as batch 0 (the durable [[graft.plans.ReleaseRun]]
+    * form builds the minhash / holdout / conversation / ANN stores and
+    * the append-only delta tables from an empty state), bootstrap
+    * adopts that state as the standing one, and day 1's crawl batch
+    * ([[crawl3RawBatch]]) releases in
     * O(batch): every probe of yesterday's corpus goes through a
     * standing index, history is never rescanned. The oracle is the
     * strongest possible pin: the FROM-SCRATCH pyramid over
@@ -3714,8 +3714,8 @@ object ExtensionQueries {
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
     // ONE tokenizer training per query invocation: the frozen-merges
-    // thunk is pulled by both the day-0 stage-6 builder and the
-    // incremental batch's stage 6 — the training is deterministic, so
+    // thunk is pulled by both day 0's stage 6 and the incremental
+    // batch's stage 6 — the training is deterministic, so
     // a per-invocation lazy memo is result-identical and saves a full
     // driver-looped BPE train (no cross-run state: the lazy val dies
     // with this call)
@@ -3735,7 +3735,8 @@ object ExtensionQueries {
 
   /** RIGHT-TO-BE-FORGOTTEN over the standing incremental-release
     * state ([[graft.plans.IncrementalRelease.forget]]) as a gated
-    * catalog row: day-0 durable release → bootstrap → the crawl-3
+    * catalog row: day-0 durable release (batch 0 over an empty state)
+    * → bootstrap (adopting that state) → the crawl-3
     * incremental batch → forget a deterministic dead set (packed
     * cids ≡ 3 mod 11 and ingest-GATE rejects ≡ 1 mod 13 — one
     * packed-resident and one ledger-resident family) → the artifact

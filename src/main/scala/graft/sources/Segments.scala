@@ -119,23 +119,6 @@ private[graft] object Segments {
     }
   }
 
-  /** Sweep every child of `dir` whose SUBTREE ([[newestMtime]]) has
-    * been untouched past the one-hour staleness cutoff — the
-    * [[sweepStaleStaging]] discipline exposed for other staging
-    * parents (e.g. a release run's `_staging` dir, where repeated
-    * crash/resume cycles would otherwise accumulate orphan
-    * full-stage-size trees indefinitely). Live writers' in-flight
-    * trees always have a fresh file underneath and are never swept. */
-  private[graft] def sweepStaleChildren(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(dir)) return
-    val cutoff = System.currentTimeMillis() - 3600L * 1000L
-    fs.listStatus(dir).foreach { st =>
-      if (newestMtime(fs, st.getPath) < cutoff) fs.delete(st.getPath, true)
-    }
-  }
-
   private def newStaging(table: String) =
     new org.apache.hadoop.fs.Path(
       s"$table/_append.staging-${java.util.UUID.randomUUID()}")
@@ -447,15 +430,19 @@ private[graft] object Segments {
     * deletion-sized and AQE broadcasts it into the anti-join. */
   def minusTombstones(
       spark: SparkSession, dir: String, table: DataFrame,
-      idCol: String = "id"): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = fsFor(spark, dir)
-    val published = fs.exists(p) &&
-      fs.listStatus(p).exists(st => SegDir.matches(st.getPath.getName))
-    if (!published) table
+      idCol: String = "id"): DataFrame =
+    if (!hasSegments(spark, s"$dir/tombstones")) table
     else table.join(
       spark.read.parquet(s"$dir/tombstones").select(col("id").as(idCol)),
       Seq(idCol), "left_anti")
+
+  /** True once a segmented table has a published `seg=N` child — a
+    * crashed first publish leaves only underscore staging, which
+    * readers must treat as an absent table. */
+  def hasSegments(spark: SparkSession, table: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = fsFor(spark, table)
+    fs.exists(p) && fs.listStatus(p).exists(st => SegDir.matches(st.getPath.getName))
   }
 
   // ------------------------------------------ pointer publication

@@ -21,7 +21,12 @@ import graft.plans.{IncrementalRelease, ReleaseRun}
   *      probe, and the run still equals the from-scratch union
   *      (exercises the `holdout_ann` store with real rows — the
   *      catalog fixture keeps the batch embedding-free so the oracle
-  *      centroids stay frozen).
+  *      centroids stay frozen);
+  *   3. NOTHING STRANDED — streamed micro-batches leave no persisted
+  *      RDD behind (each `runDeltas` releases what it cut).
+  *
+  * Every test starts from a copy of ONE day-0 state, released as
+  * batch 0 by [[graft.plans.ReleaseRun]] and adopted by `bootstrap`.
   */
 class IncrementalReleaseSpec extends SparkSpec {
 
@@ -39,17 +44,22 @@ class IncrementalReleaseSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(String, String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
-  // ONE day-0 durable run shared by every test (read-only after build)
-  private lazy val day0Dir: String = {
-    val dir = tmp("graft_incr_day0") + "/day0"
-    ReleaseRun.run(spark, rawInput, emb, transcripts _, () => merges, dir)
-    dir
+  // ONE day-0 durable run, bootstrapped once into a template state
+  // every test copies (read-only after build)
+  private lazy val day0State: String = {
+    val dir = tmp("graft_incr_day0")
+    ReleaseRun.run(spark, rawInput, emb, transcripts _, () => merges, s"$dir/day0")
+    IncrementalRelease.bootstrap(spark, s"$dir/day0", s"$dir/state")
+    s"$dir/state"
   }
 
   private def freshState(): String = {
-    val stateDir = tmp("graft_incr_state") + "/state"
-    IncrementalRelease.bootstrap(spark, day0Dir, stateDir)
-    stateDir
+    val stateDir = java.nio.file.Paths.get(tmp("graft_incr_state"), "state")
+    val from = java.nio.file.Paths.get(day0State)
+    val files = java.nio.file.Files.walk(from)
+    try files.forEach(p => java.nio.file.Files.copy(p, stateDir.resolve(from.relativize(p))))
+    finally files.close()
+    stateDir.toString
   }
 
   private def incr(stateDir: String, batch: DataFrame,
@@ -78,7 +88,7 @@ class IncrementalReleaseSpec extends SparkSpec {
     // and both must equal a full from-scratch release over the union
     val scratch = rows(graft.operators.Release.pipeline(spark,
       rawInput.unionByName(b1).unionByName(b2), emb, transcripts _,
-      () => merges, new graft.operators.Release.LocalStager))
+      () => merges))
     assert(combined == scratch,
       "the incremental composition must reproduce a from-scratch " +
         "re-release over the union row for row")
@@ -127,11 +137,16 @@ class IncrementalReleaseSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))))
       q.processAllAvailable()
     }
+    // every persisted RDD a micro-batch's runDeltas creates — its own
+    // cuts and the dedup probe persists — is released by batch end
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     try { feed(b1); feed(b2) } finally q.stop()
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(left.isEmpty, s"streamed micro-batches stranded persisted RDDs $left")
     val streamed = rows(graft.plans.IncrementalRelease.artifact(spark, state))
     val scratch = rows(graft.operators.Release.pipeline(spark,
       rawInput.unionByName(b1).unionByName(b2), emb, transcripts _,
-      () => merges, new graft.operators.Release.LocalStager))
+      () => merges))
     assert(streamed == scratch,
       "the streamed store-warming composition must equal the " +
         "from-scratch batch release on the union")
@@ -278,8 +293,9 @@ class IncrementalReleaseSpec extends SparkSpec {
   test("the persisted-ANN semantic probe drops a batch doc embedded " +
     "next to a day-0 holdout doc, still equal to from-scratch") {
     // a day-0 holdout embedding (the semantic corpus the ANN store
-    // froze at bootstrap)
-    val holdVec = spark.read.parquet(s"$day0Dir/stages/s5_test_emb")
+    // froze on day 0)
+    val holdVec = spark.read.parquet(s"$day0State/holdout_texts/rows")
+      .select(col("doc_id").as("vec_id")).join(emb, "vec_id")
       .orderBy(col("vec_id")).limit(1)
       .select(col("embedding")).head().getSeq[Float](0)
     // give every fresh (+5M) batch doc destined for TRAIN/VAL that
@@ -299,7 +315,7 @@ class IncrementalReleaseSpec extends SparkSpec {
     val incremental = rows(incr(state, batch, embExt))
     val scratch = rows(graft.operators.Release.pipeline(spark,
       rawInput.unionByName(batch), embExt, transcripts _,
-      () => merges, new graft.operators.Release.LocalStager))
+      () => merges))
     assert(incremental == scratch,
       "semantic-evidence batch must still equal from-scratch")
     val semDrops = incremental.collect {
@@ -309,5 +325,35 @@ class IncrementalReleaseSpec extends SparkSpec {
     assert(semDrops.nonEmpty,
       "at least one batch doc must be dropped by the persisted-ANN " +
         "semantic probe (cosine 1 to a day-0 holdout embedding)")
+  }
+
+  test("inParallel reports every failure: the first (in task order) " +
+    "rethrows with the others suppressed, once every task settled") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException] {
+      IncrementalRelease.inParallel(
+        () => throw new IllegalStateException("first"),
+        () => { ran.incrementAndGet(); () },
+        () => throw new IllegalArgumentException("second"))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    assert(ran.get == 1, "a sibling of a failed task still runs to completion")
+  }
+
+  test("day-0 packing: next-fit resumed from an EMPTY tail is the " +
+    "from-scratch next-fit") {
+    val items = spark.range(0, 300).select(col("id").as("doc_id"),
+      pmod(col("id"), lit(3L)).as("grp"),
+      (pmod(col("id") * 7919L, lit(300L)) + 1).as("n_tokens"))
+    val emptyTail = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "grp BIGINT, bin_id BIGINT, fill BIGINT"))
+    assertRows(
+      graft.operators.Packing.packBinsByCountFrom(items, "doc_id", "grp",
+        "n_tokens", 512, emptyTail),
+      graft.operators.Packing.packBinsByCount(items, "doc_id", "grp",
+        "n_tokens", 512).collect().toSeq)
   }
 }

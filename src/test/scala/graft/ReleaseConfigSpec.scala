@@ -89,7 +89,7 @@ class ReleaseConfigSpec extends SparkSpec {
           spark.read.parquet(s"$sfDir/embeddings.parquet"),
           keep => graft.queries.ExtensionQueries.sftTranscriptsOf(spark, keep),
           () => graft.queries.ExtensionQueries.releaseMerges(spark, sfDir),
-          new graft.operators.Release.LocalStager, cfg)
+          cfg)
         .filter(org.apache.spark.sql.functions.col("part") === "shard")
         .count()
     val wide = binCount(ReleaseConfig())
